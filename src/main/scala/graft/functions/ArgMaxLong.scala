@@ -1,7 +1,8 @@
 package graft.functions
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualNullSafe, Expression, GreaterThan, If, IsNotNull, IsNull, Literal, Not, Or}
+import org.apache.spark.sql.catalyst.analysis.FunctionRegistryBase
+import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, EqualNullSafe, ExpectsInputTypes, Expression, GreaterThan, If, IsNotNull, IsNull, Literal, Not, Or}
 import org.apache.spark.sql.catalyst.expressions.aggregate.DeclarativeAggregate
 import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
 
@@ -31,11 +32,16 @@ import org.apache.spark.sql.types.{BooleanType, DataType, LongType}
   *  - ties keep the first-seen row — unreachable when (o1, o2) is
   *    unique within a group, which every gated consumer guarantees
   *    ((us, event_id) is unique per event).
+  *
+  * All three arguments must be BIGINT (no implicit casts: callers cast
+  * explicitly), and the function takes exactly three; anything else
+  * fails analysis with an `AnalysisException`.
   */
 case class ArgMaxLong(valueExpr: Expression, ord1: Expression,
-    ord2: Expression) extends DeclarativeAggregate {
+    ord2: Expression) extends DeclarativeAggregate with ExpectsInputTypes {
 
   override def children: Seq[Expression] = Seq(valueExpr, ord1, ord2)
+  override def inputTypes = Seq(LongType, LongType, LongType)
   override def nullable: Boolean = true
   override def dataType: DataType = LongType
   override def prettyName: String = "argmax_long"
@@ -95,9 +101,13 @@ case class ArgMaxLong(valueExpr: Expression, ord1: Expression,
 }
 
 object ArgMaxLong {
-  /** Register `argmax_long(v, o1, o2)` as a SQL-callable aggregate. */
+  /** Register `argmax_long(v, o1, o2)` as a SQL-callable aggregate.
+    * Spark's own reflective builder matches the call against the
+    * three-argument constructor, so any other arity raises its
+    * WRONG_NUM_ARGS `AnalysisException`. */
   def register(spark: SparkSession): Unit =
     spark.sessionState.functionRegistry.createOrReplaceTempFunction(
-      "argmax_long", exprs => ArgMaxLong(exprs(0), exprs(1), exprs(2)),
+      "argmax_long",
+      FunctionRegistryBase.build[ArgMaxLong]("argmax_long", None)._2,
       "built-in")
 }

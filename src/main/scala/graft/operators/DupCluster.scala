@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Duplicate-cluster assignment: connected components over the
@@ -25,10 +27,20 @@ import org.apache.spark.sql.functions._
   * (groupBy-min + re-key join), ~4 key shuffles total, on an edge
   * frame that only gets smaller. `localCheckpoint` truncates the plan
   * lineage each round, which is what keeps the iteration viable on a
-  * real cluster. The driver-side convergence check (edge count, then
-  * an anti-join only when counts tie) is the loop condition every
-  * iterative graph algorithm needs — it moves one long per round, not
-  * data.
+  * real cluster.
+  *
+  * Driver hand-off: every round ends with an exact count of the live
+  * (symmetric, distinct) edge set — the loop's convergence check, one
+  * long per round. Once that count is ≤ [[LocalCcEdgeCap]] the loop
+  * stops contracting, collects the checkpointed edges and finishes
+  * with a min-root union-find on the driver; the labels come back as
+  * a small local frame. Star contraction keeps the node set and the
+  * components of the graph unchanged, so a hand-off after any round
+  * yields exactly the labels the distributed fixpoint would reach.
+  * Above the cap the rounds run on the cluster as before, so a
+  * corpus-scale graph never reaches the driver; at sf0.01 and sf0.1
+  * every producer's graph starts under the cap and skips the
+  * per-round jobs and their planning entirely.
   */
 object DupCluster {
 
@@ -40,7 +52,8 @@ object DupCluster {
     * to a table and read it twice. `clusters` always recomputes (so
     * its cost stays honestly benchmarked); only the derived consumer
     * [[keepBest]] reuses a same-session/same-dir frame. The frame is
-    * localCheckpoint-materialized, so reuse replays no lineage.
+    * materialized (a local relation after the driver hand-off, a
+    * localCheckpoint otherwise), so reuse replays no lineage.
     * Assumes the parquet under `dir` is immutable for the session
     * (true of the driver harness; a mutable-input deployment would
     * key the memo on a data fingerprint) and a single-threaded
@@ -48,16 +61,26 @@ object DupCluster {
   @volatile private var lastLabels: Option[(SparkSession, String, DataFrame)] =
     None
 
-  /** Hash-Min fixpoint over an arbitrary (ida, idb) pair graph:
-    * (id, cluster_id) with cluster_id = min id reachable through
-    * pairs. Shared by the text (d06, MinHash pairs) and embedding
-    * (d09, LSH-bucketed cosine pairs) cluster operators. */
-  /** Rounds (large-star + small-star passes) the most recent
-    * [[fixpointLabels]] call took to converge, including the final
-    * no-change round — scale telemetry: star contraction makes this
-    * O(log n), so BASELINE.md's sf1 section records the count to
-    * prove convergence stays flat as the corpus grows. */
+  /** Live-edge bound for the driver hand-off in [[fixpointLabels]]:
+    * 65,536 symmetric (long, long) edges, about 1 MB collected and a
+    * few MB of union-find state. A code constant, never derived from
+    * driver memory or configuration, so plans and fingerprints are
+    * the same on every host. */
+  val LocalCcEdgeCap: Long = 1L << 16
+
+  /** Distributed rounds (large-star + small-star passes) the most
+    * recent [[fixpointLabels]] call ran before it finished: the
+    * rounds before the driver hand-off, or, when the edge set never
+    * fell under the cap, every round including the final no-change
+    * round. Scale telemetry: star contraction makes this O(log n), so
+    * BASELINE.md's sf1 section records the count to prove convergence
+    * stays flat as the corpus grows. */
   @volatile var lastFixpointRounds: Int = 0
+
+  /** Live edge count the most recent [[fixpointLabels]] call handed to
+    * the driver's union-find, or -1 when it converged on the cluster
+    * (telemetry next to [[lastFixpointRounds]]). */
+  @volatile var lastHandOffEdges: Long = -1L
 
   /** One large-star pass: every node u hooks its LARGER neighbors to
     * m(u) = min(N(u) ∪ {u}). Edges to smaller neighbors are carried
@@ -90,7 +113,14 @@ object DupCluster {
       .distinct()
   }
 
-  private[graft] def fixpointLabels(pairs0: DataFrame): DataFrame = {
+  /** Connected-component labels over an arbitrary BIGINT (ida, idb)
+    * pair graph: (id, cluster_id) with cluster_id = min id reachable
+    * through pairs. Shared by the text (d06, MinHash pairs), embedding
+    * (d09, LSH-bucketed cosine pairs), perceptual (m07) and mutual-kNN
+    * (s11) cluster operators. `localCap` is the hand-off bound; it
+    * exists so specs can pin both branches, callers keep the default. */
+  private[graft] def fixpointLabels(pairs0: DataFrame,
+      localCap: Long = LocalCcEdgeCap): DataFrame = {
     val pairs = pairs0.select(col("ida"), col("idb"))
       .filter(col("ida") =!= col("idb"))
     // LAZY checkpoint + count (round 16): the eager form ran one job
@@ -104,7 +134,7 @@ object DupCluster {
     var edgeCount = edges.count() // materializes the checkpoint
     var changed = true
     var rounds = 0
-    while (changed) {
+    while (changed && edgeCount > localCap) {
       val next = smallStar(largeStar(edges)).localCheckpoint(false)
       val nextCount = next.count() // materializes the checkpoint
       // set equality: both frames are distinct, so equal counts plus
@@ -120,10 +150,43 @@ object DupCluster {
     // converged: disjoint stars with the component-minimum id at the
     // center. A member's only neighbor is its center; a center's
     // neighbors are all larger, so least(src, min(dst)) labels both.
-    edges.groupBy(col("src").as("id"))
+    val starLabels = edges.groupBy(col("src").as("id"))
       .agg(min(col("dst")).as("mn"))
       .select(col("id"), least(col("id"), col("mn")).as("cluster_id"))
-      .localCheckpoint()
+    if (edgeCount <= localCap) {
+      // the collect is bounded by the exact count just taken
+      lastHandOffEdges = edgeCount
+      val rows = unionFindLabels(
+        edges.collect().map(r => (r.getLong(0), r.getLong(1))))
+        .map { case (id, c) => Row(id, c) }
+      // the star frame's schema is analysis-only here: no job runs
+      edges.sparkSession.createDataFrame(rows.asJava, starLabels.schema)
+    } else {
+      lastHandOffEdges = -1L
+      starLabels.localCheckpoint()
+    }
+  }
+
+  /** Min-root union-find over an edge list: (id, smallest id in its
+    * component) for every endpoint. Path compression keeps finds
+    * near-constant; linking the larger root under the smaller keeps
+    * every root its set's minimum, which is the star fixpoint's
+    * cluster_id. */
+  private def unionFindLabels(
+      edges: Iterable[(Long, Long)]): Seq[(Long, Long)] = {
+    val parent = scala.collection.mutable.LongMap.empty[Long]
+    def find(x: Long): Long = {
+      var r = x
+      while (parent.getOrElseUpdate(r, r) != r) r = parent(r)
+      var y = x
+      while (y != r) { val up = parent(y); parent(y) = r; y = up }
+      r
+    }
+    for ((a, b) <- edges) {
+      val (ra, rb) = (find(a), find(b))
+      if (ra != rb) parent(math.max(ra, rb)) = math.min(ra, rb)
+    }
+    parent.keys.toSeq.map(x => x -> find(x))
   }
 
   /** MinHash-pair labels for (session, dir), memoized for [[keepBest]]. */
@@ -160,7 +223,7 @@ object DupCluster {
   }
 
   /** d09: duplicate clusters over the EMBEDDING near-dup graph — the
-    * same Hash-Min fixpoint as d06 run on [[Similarity
+    * same star-contraction fixpoint as d06 run on [[Similarity
     * .embeddingNearDupsBucketed]]'s pairs, so the embedding-dedup
     * pipeline has the same pairs → clusters stage the text pipeline
     * has (semantic dup groups spanning more than one pair collapse to

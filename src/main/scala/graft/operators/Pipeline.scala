@@ -1,5 +1,10 @@
 package graft.operators
 
+import java.util.concurrent.{Executors, TimeUnit}
+
+import scala.concurrent.{Await, ExecutionContext, Future}
+import scala.concurrent.duration.FiniteDuration
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -190,24 +195,10 @@ object Pipeline {
     // driver) and only the actions run in the pool. Results are the
     // same branch frames, materialized — the card's joins below are
     // unchanged.
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(7)
-    val (ckEp, ckDr, ckEd, ckOv, ckDm, ckQ, ckNv) = try {
-      implicit val ec: scala.concurrent.ExecutionContext =
-        scala.concurrent.ExecutionContext.fromExecutorService(pool)
-      def mat(tag: String, df: DataFrame) = scala.concurrent.Future {
-        s.sparkContext.setJobDescription(s"x26 branch: $tag")
-        val out = df.localCheckpoint()
-        s.sparkContext.setJobDescription(null)
-        out
-      }
-      val fs = Seq(mat("epoch_alloc", ep), mat("drift", dr),
-        mat("emb_drift", ed), mat("overlap", ov), mat("dup_matrix", dm0),
-        mat("quality_keep", q0), mat("novelty_median", nv0))
-      val r = scala.concurrent.Await.result(
-        scala.concurrent.Future.sequence(fs),
-        scala.concurrent.duration.Duration.Inf)
-      (r(0), r(1), r(2), r(3), r(4), r(5), r(6))
-    } finally pool.shutdown()
+    val Seq(ckEp, ckDr, ckEd, ckOv, ckDm, ckQ, ckNv) =
+      materializeConcurrently(s, "x26", Seq("epoch_alloc" -> ep,
+        "drift" -> dr, "emb_drift" -> ed, "overlap" -> ov,
+        "dup_matrix" -> dm0, "quality_keep" -> q0, "novelty_median" -> nv0))
     val intra = ckDm.filter(col("source_a") === col("source_b"))
       .select(col("source_a").as("source"),
         col("n_pairs").as("intra_dup_pairs"))
@@ -232,6 +223,43 @@ object Pipeline {
         "intra_dup_pairs", "cross_dup_pairs", "keep_rate_e6",
         "med_novelty_e6")
       .orderBy("source")
+  }
+
+  /** Longest wait for [[materializeConcurrently]]'s branches: x26's
+    * seven branches take seconds at sf0.1, so an hour is far above any
+    * healthy run and only bounds a hung one. */
+  val BranchWait: FiniteDuration = FiniteDuration(1, TimeUnit.HOURS)
+
+  /** localCheckpoints `branches` concurrently on a pool of one thread
+    * per branch, every job tagged with one job group and described as
+    * "`tag` branch: name". The wait is bounded by `waitAtMost`; when a
+    * branch fails or the wait runs out, every branch job still running
+    * is cancelled through the group (interrupting its tasks), the pool
+    * is shut down with interrupts, and the failure is rethrown, so a
+    * poisoned branch fails the query instead of hanging it. */
+  private[graft] def materializeConcurrently(s: SparkSession, tag: String,
+      branches: Seq[(String, DataFrame)],
+      waitAtMost: FiniteDuration = BranchWait): Seq[DataFrame] = {
+    val sc = s.sparkContext
+    val group = s"$tag-branches-${java.util.UUID.randomUUID()}"
+    val pool = Executors.newFixedThreadPool(branches.size)
+    implicit val ec: ExecutionContext =
+      ExecutionContext.fromExecutorService(pool)
+    try {
+      val fs = branches.map { case (name, df) =>
+        Future {
+          sc.setJobGroup(group, s"$tag branch: $name",
+            interruptOnCancel = true)
+          try df.localCheckpoint() finally sc.clearJobGroup()
+        }
+      }
+      Await.result(Future.sequence(fs), waitAtMost)
+    } catch {
+      case e: Throwable =>
+        sc.cancelJobGroup(group)
+        pool.shutdownNow()
+        throw e
+    } finally pool.shutdown()
   }
 
   /** x27 repetition cut: documents whose 3-gram duplicate share (t06's

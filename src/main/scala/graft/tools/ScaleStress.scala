@@ -20,9 +20,14 @@ import graft.operators.{Dedup, DupCluster, TextHash}
   *    Dedup.simhashPairs' 4×8-bit bands under the 500 dense-bucket
   *    cap, d08 Similarity.embeddingNearDupsBucketed's 4×4-bit
   *    hyperplane bands.
-  *  - `cc_rounds`: Hash-Min fixpoint rounds to convergence for d06
-  *    (text) and d09 (embedding) cluster graphs — bounded by
-  *    component diameter, so it must stay flat as the corpus grows.
+  *  - `cc_rounds`: distributed star-contraction rounds for the d06
+  *    (text), d09 (embedding) and s11 (mutual-kNN) cluster graphs
+  *    before the driver hand-off (all rounds when the graph converged
+  *    on the cluster) — O(log n), so it must stay flat as the corpus
+  *    grows.
+  *  - `cc_handoff_edges`: the live edge count each fixpoint handed to
+  *    the driver's union-find (≤ DupCluster.LocalCcEdgeCap), or -1
+  *    when it converged on the cluster.
   *  - `out_rows`: result cardinalities for the same queries.
   *
   * Usage: runMain graft.tools.ScaleStress [sfDir]
@@ -323,16 +328,18 @@ object ScaleStress {
     val t36W = TextAnalysis.classifierTrain(spark, dir)
       .filter(col("w") =!= 0L).count()
 
-    // CC rounds + output cardinalities (clusters runs the fixpoint)
+    // CC rounds + output cardinalities (clusters runs the fixpoint):
+    // distributed rounds before the driver hand-off, and the live edge
+    // count handed off (-1: the graph converged on the cluster)
     val d06Rows = DupCluster.clusters(spark, dir).count()
-    val d06Rounds = DupCluster.lastFixpointRounds
+    val d06Cc = (DupCluster.lastFixpointRounds, DupCluster.lastHandOffEdges)
     val d09Rows = DupCluster.embeddingClusters(spark, dir).count()
-    val d09Rounds = DupCluster.lastFixpointRounds
+    val d09Cc = (DupCluster.lastFixpointRounds, DupCluster.lastHandOffEdges)
     // s11: CC over the mutual-kNN graph — edge set is ≤ n·k/2 by
     // construction, so rounds AND edges must stay tame as n grows
     val s11Edges = graft.operators.Similarity.mutualKnn(spark, dir).count()
     val s11Rows = DupCluster.knnComponents(spark, dir).count()
-    val s11Rounds = DupCluster.lastFixpointRounds
+    val s11Cc = (DupCluster.lastFixpointRounds, DupCluster.lastHandOffEdges)
 
     val d02Rows = Dedup.jaccardPairs(spark, dir,
       maxShingleDf = Some(Dedup.JaccardDfCap)).count()
@@ -375,7 +382,9 @@ object ScaleStress {
         s""""retrieval":{"phrase":"$phW1 $phW2","c12":$phC12,""" +
         s""""pa_rows":$phPa,"pb_rows":$phPb,"pair_rows":$phJoinRows,""" +
         s""""s08_cand_docs":$s08Cand},""" +
-        s""""cc_rounds":{"d06":$d06Rounds,"d09":$d09Rounds,"s11":$s11Rounds},""" +
+        s""""cc_rounds":{"d06":${d06Cc._1},"d09":${d09Cc._1},"s11":${s11Cc._1}},""" +
+        s""""cc_handoff_edges":{"d06":${d06Cc._2},"d09":${d09Cc._2},""" +
+        s""""s11":${s11Cc._2}},""" +
         s""""out_rows":{"d02":$d02Rows,"d03":$d03Rows,"d06":$d06Rows,""" +
         s""""d08":$d08Rows,"d09":$d09Rows,"s11":$s11Rows,""" +
         s""""s11_edges":$s11Edges}$exactJson}""")

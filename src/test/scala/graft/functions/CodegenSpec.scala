@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.{AnalysisException, Row, SparkSession}
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Proves the native hash expressions really participate in codegen:
@@ -113,5 +113,20 @@ class CodegenSpec extends AnyFunSuite {
         org.apache.spark.unsafe.types.UTF8String.fromString("a"),
         1000000007L), null), s"$mode: null element must pass through")
     }
+  }
+
+  test("argmax_long rejects non-BIGINT arguments and the wrong arity") {
+    val s = spark.newSession()
+    ArgMaxLong.register(s)
+    val from = "FROM VALUES (1L, 2L, 3L) AS t(v, o1, o2)"
+    val wrongType = intercept[AnalysisException](
+      s.sql(s"SELECT argmax_long(v, o1, 'x') $from").collect())
+    assert(wrongType.getCondition.startsWith("DATATYPE_MISMATCH"),
+      wrongType.getMessage)
+    val wrongArity = intercept[AnalysisException](
+      s.sql(s"SELECT argmax_long(v, o1) $from").collect())
+    assert(wrongArity.getCondition == "WRONG_NUM_ARGS.WITHOUT_SUGGESTION",
+      wrongArity.getMessage)
+    assert(s.sql(s"SELECT argmax_long(v, o1, o2) $from").head.getLong(0) == 1L)
   }
 }

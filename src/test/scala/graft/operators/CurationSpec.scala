@@ -342,4 +342,39 @@ class CurationSpec extends AnyFunSuite {
     assert(byLayout("zorder") <= byLayout("time") &&
       byLayout("zorder") <= byLayout("value"), s"z-order not best: $byLayout")
   }
+
+  test("a poisoned x26 branch fails the query instead of hanging it") {
+    import scala.concurrent.duration._
+    // one-partition frames, so a blocked task never holds the cores
+    // the other branches need
+    def one = spark.range(0, 1, 1, 1).toDF("x")
+    val block = udf { (x: Long) => Thread.sleep(600000L); x }
+      .asNondeterministic()
+    val poison = udf { (x: Long) =>
+      if (x >= 0) throw new IllegalStateException("poisoned branch"); x
+    }.asNondeterministic()
+    val hung = one.select(block(col("x")).as("x"))
+    def drained(): Boolean = {
+      val deadline = System.nanoTime() + 30.seconds.toNanos
+      while (spark.sparkContext.statusTracker.getActiveJobIds().nonEmpty &&
+        System.nanoTime() < deadline) Thread.sleep(100)
+      spark.sparkContext.statusTracker.getActiveJobIds().isEmpty
+    }
+
+    val t0 = System.nanoTime()
+    val failed = intercept[Exception](Pipeline.materializeConcurrently(
+      spark, "poison", Seq("ok" -> one, "hung" -> hung,
+        "poisoned" -> one.select(poison(col("x")).as("x"))), 5.minutes))
+    assert(Iterator.iterate[Throwable](failed)(_.getCause).takeWhile(_ != null)
+      .exists(e => String.valueOf(e.getMessage).contains("poisoned branch")),
+      s"the branch failure was not rethrown: $failed")
+    assert(System.nanoTime() - t0 < 2.minutes.toNanos,
+      "a failed branch waited for its hung sibling")
+    assert(drained(), "the hung branch's job was not cancelled")
+
+    intercept[java.util.concurrent.TimeoutException](
+      Pipeline.materializeConcurrently(spark, "hang", Seq("hung" -> hung),
+        2.seconds))
+    assert(drained(), "a timed-out branch's job was not cancelled")
+  }
 }

@@ -402,6 +402,11 @@ class OperatorsSpec extends AnyFunSuite {
     // the sf fixtures don't contain: a long path with shuffled ids
     // (worst case for min-spread), a star whose center is NOT the min
     // id, cliques, isolated pairs, and a deterministic random graph.
+    // Each graph runs three ways: cap 0 (every round on the cluster),
+    // the default cap (handed to the driver before any round) and,
+    // where the converged edge count is below the initial one, a cap
+    // at the converged count, so the hand-off happens after some
+    // rounds but before the round that would detect convergence.
     import spark.implicits._
     val rnd = new scala.util.Random(7)
     val shuffled = rnd.shuffle((0L until 64L).toVector)
@@ -416,6 +421,7 @@ class OperatorsSpec extends AnyFunSuite {
       "random" -> Seq.fill(120)((rnd.nextLong(48L), rnd.nextLong(48L)))
         .filter(p => p._1 != p._2)
     )
+    val midLoop = scala.collection.mutable.Buffer[String]()
     for ((name, pairs) <- graphs) {
       val parent = scala.collection.mutable.Map[Long, Long]()
       def find(x: Long): Long = {
@@ -428,9 +434,59 @@ class OperatorsSpec extends AnyFunSuite {
       }
       val expected = pairs.flatMap(p => Seq(p._1, p._2)).distinct
         .map(x => x -> find(x)).toMap
-      val got = DupCluster.fixpointLabels(pairs.toDF("ida", "idb"))
+      def labels(cap: Long) =
+        DupCluster.fixpointLabels(pairs.toDF("ida", "idb"), cap)
+          .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+      // symmetric distinct edges; a converged star forest keeps one
+      // edge pair per non-center node
+      val initial = 2L * pairs.map(p => (p._1 min p._2, p._1 max p._2))
+        .distinct.size
+      val converged = 2L * (expected.size - expected.values.toSet.size)
+
+      assert(labels(0L) == expected, s"$name: cap 0 diverges from union-find")
+      assert(DupCluster.lastHandOffEdges == -1L,
+        s"$name: cap 0 must converge on the cluster")
+      val distRounds = DupCluster.lastFixpointRounds
+
+      assert(labels(DupCluster.LocalCcEdgeCap) == expected,
+        s"$name: driver hand-off diverges from union-find")
+      assert(DupCluster.lastFixpointRounds == 0 &&
+        DupCluster.lastHandOffEdges == initial,
+        s"$name: a graph under the cap must hand off before any round")
+
+      if (converged < initial) {
+        assert(labels(converged) == expected,
+          s"$name: mid-loop hand-off diverges from union-find")
+        assert(DupCluster.lastFixpointRounds >= 1 &&
+          DupCluster.lastFixpointRounds < distRounds &&
+          DupCluster.lastHandOffEdges <= converged,
+          s"$name: cap $converged must hand off mid-loop " +
+            s"(rounds ${DupCluster.lastFixpointRounds} of $distRounds)")
+        midLoop += name
+      }
+    }
+    assert(midLoop.toSet == Set("two cliques", "random"),
+      s"mid-loop hand-off covered only $midLoop")
+  }
+
+  test("d06/d09/s11 labels are identical on the cluster and on the driver") {
+    // the sf0.01 gate fixture next to this suite's sf0.001 one
+    val d = new java.io.File(new java.io.File(dir).getParent, "sf0.01").getPath
+    val graphs = Seq(
+      "d06" -> Dedup.minhashLshPairsMemo(spark, d),
+      "d09" -> Similarity.embeddingNearDupsBucketedMemo(spark, d),
+      "s11" -> Similarity.mutualKnn(spark, d))
+    for ((name, pairs) <- graphs) {
+      def labels(cap: Long) = DupCluster.fixpointLabels(pairs, cap)
         .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-      assert(got == expected, s"$name: star labels diverge from union-find")
+      val onCluster = labels(0L)
+      assert(DupCluster.lastHandOffEdges == -1L,
+        s"$name: cap 0 must converge on the cluster")
+      val onDriver = labels(DupCluster.LocalCcEdgeCap)
+      assert(DupCluster.lastHandOffEdges >= 0L,
+        s"$name: sf0.01 graph no longer fits the cap — law is vacuous")
+      assert(onCluster.nonEmpty && onDriver == onCluster,
+        s"$name: driver labels diverge from the distributed fixpoint")
     }
   }
 

@@ -26,11 +26,13 @@ class GatedOutputSpec extends AnyFunSuite {
 
   test("every gated output schema is scalar-only (no array/struct/map)") {
     // NOTE: "schema-only" is not free for every query — the cluster
-    // queries (d06/d07/d09/d10) run DupCluster's driver-side fixpoint
-    // loop during DataFrame *construction*, so building their frames
-    // executes real jobs (and warms the label memo). Accepted cost:
-    // the memoized fixpoint makes the second pair of queries cheap,
-    // and sf0.001 converges in a couple of rounds.
+    // queries (d06/d07/d09/d10, m07/m08, s11/s12/s15, x24) run
+    // DupCluster's fixpoint during DataFrame *construction*, so
+    // building their frames executes real jobs (and warms the label
+    // memo). Accepted cost: the memoized labels make each consumer
+    // cheap, and every sf0.001 pair graph is under
+    // DupCluster.LocalCcEdgeCap, so the fixpoint is one count and one
+    // collect finished by a driver-side union-find, with no rounds.
     val offenders = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
         fn(spark, dir).schema.fields.collect {
