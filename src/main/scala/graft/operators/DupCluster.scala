@@ -44,22 +44,19 @@ import org.apache.spark.sql.functions._
   */
 object DupCluster {
 
-  /** The last fixpoint labels frame, keyed by (session, data dir).
-    * Cluster labels are a materialized pipeline stage with two
-    * consumers (d06's sizes, d07's canonical selection); computing
-    * the iterative fixpoint once and deriving both outputs from it is
-    * the honest pipeline shape — a production job would write labels
-    * to a table and read it twice. `clusters` always recomputes (so
-    * its cost stays honestly benchmarked); only the derived consumer
-    * [[keepBest]] reuses a same-session/same-dir frame. The frame is
-    * materialized (a local relation after the driver hand-off, a
-    * localCheckpoint otherwise), so reuse replays no lineage.
-    * Assumes the parquet under `dir` is immutable for the session
-    * (true of the driver harness; a mutable-input deployment would
-    * key the memo on a data fingerprint) and a single-threaded
-    * driver, like every Spark query builder in this repo. */
-  @volatile private var lastLabels: Option[(SparkSession, String, DataFrame)] =
-    None
+  /** Fixpoint labels over the MinHash pairs (a [[Memo]]). Cluster
+    * labels are a materialized pipeline stage with several consumers
+    * (d06's sizes, d07's canonical selection, x24's sampling);
+    * computing the iterative fixpoint once and deriving every output
+    * from it is the honest pipeline shape — a production job would
+    * write labels to a table and read it many times. d06 publishes;
+    * d07 and x24 read. The frame is materialized (a local relation
+    * after the driver hand-off, a localCheckpoint otherwise), so
+    * reuse replays no lineage. The other three label memos below
+    * follow the same producer/consumer split. */
+  private[operators] val dupLabels = Memo("dup_labels") { (s, dir) =>
+    fixpointLabels(Dedup.minhashLshPairsMemo(s, dir).select("ida", "idb"))
+  }
 
   /** Live-edge bound for the driver hand-off in [[fixpointLabels]]:
     * 65,536 symmetric (long, long) edges, about 1 MB collected and a
@@ -189,14 +186,6 @@ object DupCluster {
     parent.keys.toSeq.map(x => x -> find(x))
   }
 
-  /** MinHash-pair labels for (session, dir), memoized for [[keepBest]]. */
-  private def computeLabels(s: SparkSession, dir: String): DataFrame = {
-    val labels =
-      fixpointLabels(Dedup.minhashLshPairsMemo(s, dir).select("ida", "idb"))
-    lastLabels = Some((s, dir, labels))
-    labels
-  }
-
   private def clustersOf(labels: DataFrame, idName: String): DataFrame = {
     val sizes = labels.groupBy("cluster_id").agg(count(lit(1)).as("cluster_sz"))
     labels.join(sizes, "cluster_id")
@@ -208,18 +197,13 @@ object DupCluster {
     * at least one near-duplicate; cluster_id = min doc_id reachable
     * through near-dup pairs. */
   def clusters(s: SparkSession, dir: String): DataFrame =
-    clustersOf(computeLabels(s, dir), "doc_id")
+    clustersOf(dupLabels.publish(s, dir), "doc_id")
 
-  /** Embedding-pair labels for (session, dir), memoized for
-    * [[keepBestEmbedding]] the same way [[lastLabels]] serves d07. */
-  @volatile private var lastEmbLabels
-      : Option[(SparkSession, String, DataFrame)] = None
-
-  private def computeEmbLabels(s: SparkSession, dir: String): DataFrame = {
-    val labels = fixpointLabels(
+  /** Embedding-pair labels: d09 publishes, [[keepBestEmbedding]]
+    * reads. */
+  private val embLabels = Memo("emb_labels") { (s, dir) =>
+    fixpointLabels(
       Similarity.embeddingNearDupsBucketedMemo(s, dir).select("ida", "idb"))
-    lastEmbLabels = Some((s, dir, labels))
-    labels
   }
 
   /** d09: duplicate clusters over the EMBEDDING near-dup graph — the
@@ -229,18 +213,12 @@ object DupCluster {
     * has (semantic dup groups spanning more than one pair collapse to
     * one canonical id). */
   def embeddingClusters(s: SparkSession, dir: String): DataFrame =
-    clustersOf(computeEmbLabels(s, dir), "vec_id")
+    clustersOf(embLabels.publish(s, dir), "vec_id")
 
-  /** aHash-pair labels for (session, dir), memoized for [[keepBestMedia]]
-    * the same way [[lastEmbLabels]] serves d10. */
-  @volatile private var lastAhashLabels
-      : Option[(SparkSession, String, DataFrame)] = None
-
-  private def computeAhashLabels(s: SparkSession, dir: String): DataFrame = {
-    val labels = fixpointLabels(
+  /** aHash-pair labels: m07 publishes, [[keepBestMedia]] reads. */
+  private val ahashLabels = Memo("ahash_labels") { (s, dir) =>
+    fixpointLabels(
       graft.operators.Multimodal.ahashPairs(s, dir).select("ida", "idb"))
-    lastAhashLabels = Some((s, dir, labels))
-    labels
   }
 
   /** m07: duplicate clusters over the PERCEPTUAL (aHash) near-dup
@@ -255,7 +233,7 @@ object DupCluster {
     * bucket capped); the fixpoint shuffles (id, label) longs only —
     * no payload byte ever enters the clustering. */
   def ahashClusters(s: SparkSession, dir: String): DataFrame =
-    clustersOf(computeAhashLabels(s, dir), "doc_id")
+    clustersOf(ahashLabels.publish(s, dir), "doc_id")
 
 
   /** arg-max per cluster — the member maximizing (score desc, id asc)
@@ -308,11 +286,7 @@ object DupCluster {
     * Scale shape: one per-cluster window rank over the cluster-member
     * frame joined to metadata longs — payload bytes never shuffle. */
   def keepBestMedia(s: SparkSession, dir: String): DataFrame = {
-    val labels = lastAhashLabels match {
-      case Some((`s`, `dir`, l)) => l
-      case _ => computeAhashLabels(s, dir)
-    }
-    val cl = clustersOf(labels, "doc_id")
+    val cl = clustersOf(ahashLabels(s, dir), "doc_id")
     val bl = graft.operators.Multimodal.mediaTable(s, dir).toDF()
       .select(col("doc_id"), col("byte_len"))
     bestPerCluster(cl.join(bl, "doc_id"), "doc_id", "byte_len")
@@ -337,18 +311,12 @@ object DupCluster {
     * Singleton vectors (no reciprocated edge) are deliberately absent,
     * matching d06/d09's members-only convention. */
   def knnComponents(s: SparkSession, dir: String): DataFrame =
-    clustersOf(computeKnnLabels(s, dir), "vec_id")
+    clustersOf(knnLabels.publish(s, dir), "vec_id")
 
-  /** Mutual-kNN labels for (session, dir), memoized for
-    * [[semanticReps]] exactly as [[lastLabels]] serves d07. */
-  @volatile private var lastKnnLabels
-      : Option[(SparkSession, String, DataFrame)] = None
-
-  private def computeKnnLabels(s: SparkSession, dir: String): DataFrame = {
-    val labels =
-      fixpointLabels(Similarity.mutualKnn(s, dir).select("ida", "idb"))
-    lastKnnLabels = Some((s, dir, labels))
-    labels
+  /** Mutual-kNN labels: s11 publishes, [[semanticReps]] and
+    * [[clusterQuality]] read. */
+  private val knnLabels = Memo("knn_labels") { (s, dir) =>
+    fixpointLabels(Similarity.mutualKnn(s, dir).select("ida", "idb"))
   }
 
   /** s12: semantic-representative selection — one vector per s11
@@ -360,11 +328,7 @@ object DupCluster {
     * the window); reuses a same-session/dir labels frame when s11
     * already ran, so the iterative fixpoint is paid once. */
   def semanticReps(s: SparkSession, dir: String): DataFrame = {
-    val labels = lastKnnLabels match {
-      case Some((`s`, `dir`, l)) => l
-      case _ => computeKnnLabels(s, dir)
-    }
-    val cl = clustersOf(labels, "vec_id")
+    val cl = clustersOf(knnLabels(s, dir), "vec_id")
     val nr = Similarity.vecNorms(s, dir)
       .select(col("vec_id"),
         floor(col("nrm") * 1000000).cast("long").as("norm_e6"))
@@ -382,11 +346,7 @@ object DupCluster {
     * the DuckDB oracle matches bit-for-bit (the same sequential-fold
     * sqrt both sides). */
   def keepBestEmbedding(s: SparkSession, dir: String): DataFrame = {
-    val labels = lastEmbLabels match {
-      case Some((`s`, `dir`, l)) => l
-      case _ => computeEmbLabels(s, dir)
-    }
-    val cl = clustersOf(labels, "vec_id")
+    val cl = clustersOf(embLabels(s, dir), "vec_id")
     val nr = Similarity.vecNorms(s, dir)
       .select(col("vec_id"),
         floor(col("nrm") * 1000000).cast("long").as("norm_e6"))
@@ -405,14 +365,10 @@ object DupCluster {
     * Cost over d06: one narrow token-count projection + a window rank
     * inside each cluster (clusters are tiny — the rank never sees more
     * rows than the cluster size). Reuses a same-session/dir labels
-    * frame when d06 already computed one (see [[lastLabels]]), so the
+    * frame when d06 already computed one (see [[dupLabels]]), so the
     * iterative fixpoint is not paid twice for the same inputs. */
   def keepBest(s: SparkSession, dir: String): DataFrame = {
-    val labels = lastLabels match {
-      case Some((`s`, `dir`, l)) => l
-      case _ => computeLabels(s, dir)
-    }
-    val cl = clustersOf(labels, "doc_id")
+    val cl = clustersOf(dupLabels(s, dir), "doc_id")
     val ntoks = graft.operators.TextHash
       .fanOut(graft.engine.Tables.t(s, dir, "documents"))
       .select(col("doc_id"),
@@ -454,11 +410,7 @@ object DupCluster {
     * set, one partial-aggregated groupBy on cluster_sz (a handful of
     * distinct keys). */
   def softDedupSample(s: SparkSession, dir: String): DataFrame = {
-    val labels = lastLabels match {
-      case Some((`s`, `dir`, l)) => l
-      case _ => computeLabels(s, dir)
-    }
-    val cl = clustersOf(labels, "doc_id")
+    val cl = clustersOf(dupLabels(s, dir), "doc_id")
       .select(col("doc_id"), col("cluster_id"), col("cluster_sz"))
     val salted = s"concat('${SoftDedupSalt}', lower(text))"
     val d = graft.operators.TextHash
@@ -499,11 +451,7 @@ object DupCluster {
     * nothing touches the corpus beyond the already-built graph, and
     * the memoized s11 fixpoint labels are reused, not recomputed. */
   def clusterQuality(s: SparkSession, dir: String): DataFrame = {
-    val labels = lastKnnLabels match {
-      case Some((`s`, `dir`, l)) => l
-      case _ => computeKnnLabels(s, dir)
-    }
-    val cl = clustersOf(labels, "vec_id")
+    val cl = clustersOf(knnLabels(s, dir), "vec_id")
     val lab = cl.select(col("vec_id"), col("cluster_id"))
     val g = Similarity.knnGraphMemo(s, dir)
       .select(col("vec_id"), col("neighbor_id"))
@@ -526,12 +474,5 @@ object DupCluster {
           .otherwise(expr(
             "(1000000L * escape_edges) div (internal_edges + escape_edges)")))
       .orderBy("cluster_id")
-  }
-
-  private[operators] def invalidateMemos(): Unit = {
-    lastLabels = None
-    lastEmbLabels = None
-    lastAhashLabels = None
-    lastKnnLabels = None
   }
 }

@@ -162,14 +162,8 @@ object Similarity {
     * baseline is the documented LSH trade (OperatorsSpec's
     * "bucketed embedding near-dups are a non-empty subset of brute
     * force" pins containment: no invented pairs). */
-  def embeddingNearDupsBucketed(s: SparkSession, dir: String): DataFrame = {
-    val (scored, handles) = bucketedScoredPairsTracked(s, dir)
-    val g = thresholdedPairs(scored)
-      .localCheckpoint() // eager: the thresholded pair list is tiny
-    handles.foreach(_.unpersist(true))
-    lastNearDupPairs = Some((s, dir, g))
-    g
-  }
+  def embeddingNearDupsBucketed(s: SparkSession, dir: String): DataFrame =
+    embeddingNearDupsBucketedMemo.publish(s, dir)
 
   private def thresholdedPairs(scored: DataFrame): DataFrame =
     scored
@@ -186,20 +180,15 @@ object Similarity {
       s: SparkSession, dir: String): DataFrame =
     thresholdedPairs(bucketedScoredPairs(s, dir))
 
-  /** The last built d08 pair frame, keyed by (session, dir) — the
-    * [[knnGraph]] build-once convention: the gated d08 entry always
-    * rebuilds and refreshes this; [[DupCluster]]'s d09 fixpoint
-    * consumes [[embeddingNearDupsBucketedMemo]]. */
-  @volatile private var lastNearDupPairs
-      : Option[(SparkSession, String, DataFrame)] = None
-
-  /** Memoized [[embeddingNearDupsBucketed]] for derived consumers. */
-  private[operators] def embeddingNearDupsBucketedMemo(
-      s: SparkSession, dir: String): DataFrame =
-    lastNearDupPairs match {
-      case Some((ms, mdir, g)) if (ms eq s) && mdir == dir => g
-      case _ => Memos.timedBuild("neardup_bucketed", dir)(
-        embeddingNearDupsBucketed(s, dir))
+  /** The d08 pair frame, published by the gated d08 entry (a
+    * [[Memo]]); [[DupCluster]]'s d09 fixpoint reads it. */
+  private[operators] val embeddingNearDupsBucketedMemo =
+    Memo("neardup_bucketed") { (s, dir) =>
+      val (scored, handles) = bucketedScoredPairsTracked(s, dir)
+      val g = thresholdedPairs(scored)
+        .localCheckpoint() // eager: the thresholded pair list is tiny
+      handles.foreach(_.unpersist(true))
+      g
     }
 
   /** Shared core of d08 and s09: exact cosine over the LSH-band
@@ -266,17 +255,22 @@ object Similarity {
     * run as a per-shard partial top-k merge at 100 TB. Deterministic
     * tie-break (cs desc, neighbor asc) keeps the oracle exact.
     *
-    * Build-once convention (the DupCluster.clusters posture): THIS
-    * entry always rebuilds — the gated s09 query is the graph build,
-    * so its bench cost stays honest — and refreshes [[lastKnnGraph]];
-    * the six derived consumers (s10/s11-via-mutual/s13/s15/s22/s23)
-    * go through [[knnGraphMemo]] and reuse a same-(session, dir, k)
-    * frame, exactly as a production pipeline writes the graph stage
-    * once and reads it from storage. The result is localCheckpoint-
-    * materialized (n·k rows — tiny), which also lets the build drop
-    * its intermediate signature/band/scored caches eagerly instead
-    * of leaking them to session clearCache. */
-  def knnGraph(s: SparkSession, dir: String, k: Int = 3): DataFrame = {
+    * Build-once: THIS entry publishes the graph (a [[Memo]] keyed
+    * by (session, dir, k)); the six derived consumers
+    * (s10/s11-via-mutual/s13/s15/s22/s23) go through [[knnGraphMemo]],
+    * exactly as a production pipeline writes the graph stage once and
+    * reads it from storage. Round-8 telemetry: the seven graph-family
+    * queries each rebuilt the same ~90 MB of band/score
+    * intermediates — 26.4 s of the 184.7 s sf0.1 bench, 39.6 s of
+    * 369 s at sf1 — for an identical n·k result. The result is
+    * localCheckpoint-materialized (n·k rows — tiny), which also lets
+    * the build drop its intermediate signature/band/scored caches
+    * eagerly instead of leaking them to session clearCache. */
+  def knnGraph(s: SparkSession, dir: String, k: Int = 3): DataFrame =
+    knnGraphs.publish(s, (dir, k))
+
+  private val knnGraphs = new Memo[(String, Int), DataFrame](
+      "knn_graph", _._1, Seq(_))({ case (s, (dir, k)) =>
     // persisted only for the duration of the build: the symmetrizing
     // union reads the scored pairs twice; once the ranked graph is
     // checkpoint-materialized the scored/signature/band frames are
@@ -290,9 +284,8 @@ object Similarity {
     // frames being freed were just materialized (cheap to remove)
     scored.unpersist(true)
     handles.foreach(_.unpersist(true))
-    lastKnnGraph = Some((s, dir, k, g))
     g
-  }
+  })
 
   private def rankedGraph(scored: DataFrame, k: Int): DataFrame = {
     val edges = scored.select(
@@ -314,24 +307,10 @@ object Similarity {
       s: SparkSession, dir: String, k: Int = 3): DataFrame =
     rankedGraph(bucketedScoredPairs(s, dir), k)
 
-  /** The last built s09 graph, keyed by (session, dir, k) — same
-    * memo contract, lifetime, and single-threaded-driver assumption
-    * as [[DupCluster]]'s label memos (see its scaladoc). */
-  @volatile private var lastKnnGraph
-      : Option[(SparkSession, String, Int, DataFrame)] = None
-
-  /** Memoized [[knnGraph]] for derived consumers: returns the
-    * same-(session, dir, k) checkpointed graph when one exists,
-    * builds it otherwise. Round-8 telemetry: the seven graph-family
-    * queries each rebuilt the same ~90 MB of band/score intermediates
-    * — 26.4 s of the 184.7 s sf0.1 bench, 39.6 s of 369 s at sf1 —
-    * for an identical n·k result. */
+  /** Memoized [[knnGraph]] for derived consumers. */
   private[operators] def knnGraphMemo(
       s: SparkSession, dir: String, k: Int = 3): DataFrame =
-    lastKnnGraph match {
-      case Some((ms, mdir, mk, g)) if (ms eq s) && mdir == dir && mk == k => g
-      case _ => Memos.timedBuild("knn_graph", dir)(knnGraph(s, dir, k))
-    }
+    knnGraphs(s, (dir, k))
 
   /** s10: mutual-k-NN filter — the symmetrization step every
     * kNN-graph consumer (agglomerative/community clustering, UMAP
@@ -688,39 +667,26 @@ object Similarity {
     (stats, asg)
   }
 
-  /** The last built Lloyd state, keyed by (session, dir) — the
-    * [[substringSpansMemo]] build-once convention applied to the
-    * 2-round EM loop that s26, s27 AND d21 each rebuilt (~2 s each at
-    * sf0.1, ~5 s at sf1): exactly as a production pipeline trains the
+  /** The Lloyd state (a [[Memo]] of two frames): the 2-round EM loop
+    * that s26, s27 AND d21 each rebuilt (~2 s each at sf0.1, ~5 s at
+    * sf1), trained once exactly as a production pipeline trains the
     * clustering once and every downstream stage reads the assignment
     * from storage. Holds (per-(bucket,dim) stats, slim (vec_id,
     * bucket, d2) assignment) — the checkpointed assignment drops the
-    * 64-long component array, so the blocks are 3 longs per vector. */
-  @volatile private var lastLloyd
-      : Option[(SparkSession, String, (DataFrame, DataFrame))] = None
+    * 64-long component array, so the blocks are 3 longs per vector.
+    * The gated s26 entry publishes it ([[lloydStateFresh]]); s27 and
+    * d21 read it. */
+  private[operators] val lloydStateMemo =
+    new Memo[String, (DataFrame, DataFrame)](
+        "lloyd_state", identity, g => Seq(g._1, g._2))({ (s, dir) =>
+      val (stats, asg, xs) = lloydStateTracked(s, dir)
+      val g = (stats.localCheckpoint(), asg.localCheckpoint())
+      xs.unpersist() // both checkpoints are materialized; cache done
+      g
+    })
 
-  /** Build the Lloyd state NOW (eager localCheckpoint), refresh the
-    * memo, and drop the component cache — the gated s26 entry always
-    * pays this honest rebuild; consumers take [[lloydStateMemo]]. */
   private[operators] def lloydStateFresh(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = {
-    val (stats, asg, xs) = lloydStateTracked(s, dir)
-    val g = (stats.localCheckpoint(), asg.localCheckpoint())
-    xs.unpersist() // both checkpoints are materialized; cache done
-    lastLloyd = Some((s, dir, g))
-    g
-  }
-
-  /** Memoized [[lloydStateFresh]] for the derived consumers (s27's
-    * quality report, d21's semantic dedup). Memos.alive: auto-rebuild
-    * on lost checkpoint blocks (executor loss on a real cluster). */
-  private[operators] def lloydStateMemo(s: SparkSession, dir: String)
-      : (DataFrame, DataFrame) =
-    lastLloyd match {
-      case Some((ms, mdir, g)) if (ms eq s) && mdir == dir &&
-          Memos.alive(g._1) && Memos.alive(g._2) => g
-      case _ => Memos.timedBuild("lloyd_state", dir)(lloydStateFresh(s, dir))
-    }
+      : (DataFrame, DataFrame) = lloydStateMemo.publish(s, dir)
 
   def kmeansLloyd(s: SparkSession, dir: String): DataFrame = {
     val (stats, _) = lloydStateFresh(s, dir)
@@ -1794,11 +1760,5 @@ object Similarity {
       .join(nearest, "source")
       .join(disp, "source")
       .orderBy("source")
-  }
-
-  private[operators] def invalidateMemos(): Unit = {
-    lastNearDupPairs = None
-    lastKnnGraph = None
-    lastLloyd = None
   }
 }

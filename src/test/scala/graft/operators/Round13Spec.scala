@@ -6,11 +6,10 @@ import org.scalatest.funsuite.AnyFunSuite
 /** Semantic invariants for the round-13 Lloyd rewrite and the x33
   * shard round trip that the row-hash oracle can't express: the
   * map-side argmin must agree with a first-principles window-rule
-  * replica (same argmin, same smallest-bucket tie-break), the
-  * build-once Lloyd memo must hand consumers the SAME checkpointed
-  * state while s26's gated entry honestly rebuilds, and x33's
+  * replica (same argmin, same smallest-bucket tie-break), and x33's
   * trained-filter manifest must survive a real partitionBy("shard")
-  * write → read round trip the way x32's does (VERDICT r12 item 5). */
+  * write → read round trip the way x32's does (VERDICT r12 item 5).
+  * The Lloyd memo's law lives in MemoSpec. */
 class Round13Spec extends AnyFunSuite {
 
   lazy val spark: SparkSession = SparkSession.builder()
@@ -21,26 +20,6 @@ class Round13Spec extends AnyFunSuite {
     .getOrCreate()
 
   val dir = "/root/testdata/sf0.01"
-
-  test("lloyd memo: consumers share one checkpointed state; " +
-      "invalidate forces a rebuild") {
-    Memos.invalidate()
-    val a = Similarity.lloydStateMemo(spark, dir)
-    val b = Similarity.lloydStateMemo(spark, dir)
-    assert((a._1 eq b._1) && (a._2 eq b._2),
-      "second memo access rebuilt the Lloyd state")
-    // the gated s26 entry always rebuilds (honest bench) AND refreshes
-    // the memo, so consumers after it ride the fresh state
-    val fresh = Similarity.lloydStateFresh(spark, dir)
-    assert(!(fresh._1 eq a._1),
-      "lloydStateFresh handed back the stale memo instead of rebuilding")
-    val c = Similarity.lloydStateMemo(spark, dir)
-    assert(c._1 eq fresh._1,
-      "memo did not pick up the fresh rebuild")
-    Memos.invalidate()
-    val d = Similarity.lloydStateMemo(spark, dir)
-    assert(!(d._1 eq fresh._1), "invalidate did not drop the Lloyd memo")
-  }
 
   test("map-side argmin replays the (d2, bucket) window rule exactly") {
     // first-principles replica of the WHOLE 2-round loop in plain

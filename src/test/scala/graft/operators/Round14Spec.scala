@@ -1,19 +1,9 @@
 package graft.operators
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.SparkSession
 import org.scalatest.funsuite.AnyFunSuite
 
 /** Round-14 laws the row-hash oracle can't express.
-  *
-  * Memos probe hygiene (VERDICT r13 item 6): the liveness probe's
-  * rate-limit map must key by the frame's checkpoint RDD id — a
-  * SparkContext-global counter that is never recycled — so a rebuilt
-  * frame can never inherit a dropped frame's probe freshness (an
-  * identityHashCode key could, on a collision), and invalidate() must
-  * clear the map so the NEXT access provably probes. The probe is a
-  * real Spark job, so the laws are pinned by counting jobs through a
-  * listener, not by peeking at private state transitions.
   *
   * t29 rank-interval identity: the scalable zipfOctaves derives each
   * octave's aggregates from frequency-group rank INTERVALS without
@@ -30,92 +20,6 @@ class Round14Spec extends AnyFunSuite {
     .getOrCreate()
 
   val dir = "/root/testdata/sf0.01"
-
-  /** Count Spark jobs started while `body` runs. Job IDS are
-    * recorded (not a bare counter) and fenced by a marker job's id:
-    * the listener bus is async and registered per call, so
-    * late-draining job-start events from a PRIOR action could leak
-    * into the window and flake the exact-zero assertion (round-14
-    * ADVICE). Job ids are monotone, so only ids above the marker's
-    * belong to `body`. */
-  private def jobsDuring(body: => Unit): Int = {
-    import scala.jdk.CollectionConverters._
-    val ids = java.util.concurrent.ConcurrentHashMap.newKeySet[Integer]()
-    val l = new SparkListener {
-      override def onJobStart(j: SparkListenerJobStart): Unit =
-        ids.add(Integer.valueOf(j.jobId))
-    }
-    // the listener bus is async (and its drain hook is
-    // private[spark]); wait until the seen-id set is quiescent
-    def settle(): Unit = {
-      var prev = -1
-      var stable = 0
-      var spins = 0
-      while (stable < 5 && spins < 100) {
-        val cur = ids.size()
-        if (cur == prev) stable += 1 else stable = 0
-        prev = cur
-        Thread.sleep(50)
-        spins += 1
-      }
-    }
-    spark.sparkContext.addSparkListener(l)
-    try {
-      spark.range(1).count() // the fence job
-      settle()
-      val fence = ids.asScala.map(_.intValue).max
-      body
-      settle()
-      ids.asScala.map(_.intValue).count(_ > fence)
-    } finally spark.sparkContext.removeSparkListener(l)
-  }
-
-  test("memo probe keys by checkpoint RDD id and re-probes after " +
-      "invalidate") {
-    import spark.implicits._
-    Memos.invalidate()
-    val g = Seq(1L, 2L, 3L).toDF("x").localCheckpoint()
-    // the key IS the checkpoint scan's RDD id — not an object hash
-    val key = Memos.probeKey(g)
-    val rddIds = g.queryExecution.logical.collect {
-      case r: org.apache.spark.sql.execution.LogicalRDD => r.rdd.id.toLong
-    }.sorted
-    assert(key.contains(rddIds),
-      s"probe key $key != checkpoint RDD ids $rddIds")
-
-    // first access probes (one job); a fresh access inside the rate
-    // window trusts the freshness and runs NO job
-    assert(jobsDuring(assert(Memos.alive(g))) >= 1,
-      "first alive() must pay the 1-row probe job (CollectLimit may\n" +
-        "      split it across >1 incremental job)")
-    assert(jobsDuring(assert(Memos.alive(g))) == 0,
-      "rate-limited alive() must not run a job")
-
-    // invalidate drops freshness with the frames: the NEXT access
-    // probes again (the round-14 law)
-    Memos.invalidate()
-    assert(Memos.lastProbeNs.isEmpty,
-      "invalidate() must clear the probe-freshness map")
-    assert(jobsDuring(assert(Memos.alive(g))) >= 1,
-      "post-invalidate alive() must re-probe")
-
-    // a REBUILT frame has its own id — its first access probes even
-    // while the old frame's freshness is still warm (no inheritance)
-    val g2 = Seq(4L, 5L).toDF("x").localCheckpoint()
-    assert(Memos.probeKey(g2) != key,
-      "rebuilt frame must not reuse the old probe key")
-    assert(jobsDuring(assert(Memos.alive(g2))) >= 1,
-      "rebuilt frame must pay its own probe")
-    // a frame COMPOSED over two checkpointed frames keys on ALL its
-    // checkpoint leaves (round-14 ADVICE: a collectFirst key let
-    // probing one frame vouch for the composition even if the second
-    // frame's blocks were lost), so its freshness is distinct from
-    // both components'
-    val both = Memos.probeKey(g.union(g2))
-    assert(both.exists(_.size == 2) && both != key && both != Memos.probeKey(g2),
-      s"composed frame must key on all checkpoint leaves, got $both")
-    Memos.invalidate()
-  }
 
   test("i14 guards the tie set at frame build, with a clean plan") {
     // round 15 replaced the per-term rank window with a distributed
